@@ -36,12 +36,13 @@ Scale notes:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ChangeTableConfig
-from ..operators.cdc import classify_op
+from ..operators.cdc import classify_op, envelope_changelog, truncate_epoch_filter
 from ..schemas import INVOICE_ROW, kafka_message_schema
 
 KAFKA_LIKE_SCHEMA = "offset long, timestamp long, value string"
@@ -122,6 +123,23 @@ def _order_coordinate() -> F.Column:
     )
 
 
+def _derive_changelog(parsed: DataFrame, cfg: ChangeTableConfig) -> DataFrame:
+    """Parsed envelopes → the flat keyed changelog every merge sink
+    consumes: envelope_changelog (the same derivation as the batch
+    snapshot, including the PK-changing-update explode into
+    delete(before.key) + insert(after.key)) carrying the total-order
+    coordinate ``__ord``.
+
+    Stateless, so the start_* sinks apply it ONCE to the streaming
+    DataFrame: the derivation is planned once per query and each
+    foreachBatch receives its changelog already derived. Built inside
+    foreachBatch it would cost ~2.5k py4j calls (150-350 ms of driver
+    time, measured warm) in every micro-batch."""
+    return envelope_changelog(
+        parsed.withColumn("__ord", _order_coordinate()), cfg, passthrough_cols=("__ord",)
+    )
+
+
 def start_event_log_sink(
     stream: DataFrame,
     out_dir: str,
@@ -139,7 +157,6 @@ def start_event_log_sink(
         F.col("timestamp").cast("long").alias("timestamp"),
         F.col("value").alias("kafka_message"),
     )
-    writer = log
     if partition_by_day:
         log = log.withColumn(
             "log_date", F.date_format(F.timestamp_millis(F.col("timestamp")), "yyyy-MM-dd")
@@ -185,39 +202,49 @@ def read_replica(
     return spark.read.parquet(os.path.join(state_dir, f"v{versions[-1]}"))
 
 
-def _batch_last_per_key(parsed: DataFrame, cfg: ChangeTableConfig):
-    """Shared micro-batch collapse: envelope_changelog derivation (same as
-    the batch snapshot — including the PK-changing-update explode into
-    delete(before.key) + insert(after.key)), truncate-epoch filter, and
-    last-event-per-key by the binlog-coordinate total order. Returns
-    (batch_last, had_truncate, cached) with final deletes KEPT (they must
-    erase existing state); ``cached`` is the persisted per-batch changelog
-    the CALLER must unpersist after its last action. Persisting is the
-    right call here and only here: a micro-batch is bounded (spills if
-    not) and every batch runs ≥3 actions over this derivation
-    (emptiness probe, truncate probe, merge write, optional agg) — without
-    the cache the parse→explode pipeline re-runs for each."""
-    from ..operators.cdc import envelope_changelog, truncate_epoch_filter
+@contextmanager
+def _live_batch(changelog: DataFrame, cfg: ChangeTableConfig):
+    """One micro-batch of _derive_changelog output, persisted while the
+    caller's block runs: yields (live, had_truncate), or None for an
+    empty batch. ``live`` is the changelog after the truncate-epoch
+    filter, with deletes KEPT (they must erase existing state).
 
-    changelog = envelope_changelog(
-        parsed.withColumn("__ord", _order_coordinate()), cfg, passthrough_cols=("__ord",)
-    ).persist()
-    # One probe job for emptiness AND truncate presence (each separate
-    # action costs fixed scheduling latency per micro-batch).
-    probe = changelog.agg(
-        F.count("*").alias("n"),
-        F.sum((F.col(cfg.op_column) == "t").cast("int")).alias("nt"),
-    ).collect()[0]
-    if probe.n == 0:
+    One probe job learns emptiness AND truncate presence together (each
+    separate action costs fixed scheduling latency per micro-batch).
+    Without a truncate the epoch filter is the identity, so it is
+    skipped: its crossJoin(broadcast(epoch)) subquery would otherwise be
+    re-planned and re-run by every later action over ``live``.
+
+    Persisting is the right call here and only here: a micro-batch is
+    bounded (spills if not), and the probe plus every action of the merge
+    (its write, and per sink the pruning-key collect, a count or the
+    aggregate delta) read this changelog — without the cache each of them
+    would re-run the parse→explode pipeline."""
+    changelog = changelog.persist()
+    try:
+        probe = changelog.agg(
+            F.count("*").alias("n"),
+            F.sum((F.col(cfg.op_column) == "t").cast("int")).alias("nt"),
+        ).collect()[0]
+        if probe.n == 0:
+            yield None
+        elif probe.nt:
+            yield truncate_epoch_filter(changelog, cfg.op_column, "__ord"), True
+        else:
+            yield changelog, False
+    finally:
         changelog.unpersist(blocking=False)
-        return None, False, None
-    had_truncate = (probe.nt or 0) > 0
-    live = truncate_epoch_filter(changelog, cfg.op_column, "__ord")
+
+
+def _batch_last_per_key(live: DataFrame, cfg: ChangeTableConfig) -> DataFrame:
+    """Shared micro-batch collapse of a _live_batch changelog: the last
+    event per key by the binlog-coordinate total order, final deletes
+    kept (``__op`` = 'd')."""
     payload = F.struct(
         F.col(cfg.op_column).alias("__op"),
         *[F.col(c) for c in cfg.value_columns],
     )
-    batch_last = (
+    return (
         live.groupBy(*cfg.key_columns)
         .agg(F.max_by(payload, F.col("__ord")).alias("__last"))
         .select(
@@ -226,7 +253,6 @@ def _batch_last_per_key(parsed: DataFrame, cfg: ChangeTableConfig):
             *[F.col(f"__last.{c}").alias(c) for c in cfg.value_columns],
         )
     )
-    return batch_last, had_truncate, changelog
 
 
 def read_agg(spark: SparkSession, state_dir: str, before: int | None = None):
@@ -242,15 +268,16 @@ def read_agg(spark: SparkSession, state_dir: str, before: int | None = None):
     return rows[0] if rows else None
 
 
-def _merge_parsed_batch(
-    parsed: DataFrame,
+def _merge_versioned_batch(
+    changelog: DataFrame,
     cfg: ChangeTableConfig,
     state_dir: str,
     batch_id: int,
     agg_col: str | None = None,
 ) -> None:
-    """One micro-batch of parsed envelopes → merged versioned state.
-    Shared by the single-table and multi-table merge sinks.
+    """One micro-batch of changelog rows (_derive_changelog output) →
+    merged versioned state. Shared by the single-table and multi-table
+    merge sinks.
 
     Crash-recovery replay: foreachBatch re-delivers batch N when the job
     died after the merge committed but before the checkpoint recorded it.
@@ -269,7 +296,7 @@ def _merge_parsed_batch(
     aggregate's history length. This is what the reference's consumers
     of the ClickHouse replica would run as a full re-aggregation per
     refresh; here the CDC stream maintains it exactly."""
-    spark = parsed.sparkSession
+    spark = changelog.sparkSession
     out = os.path.join(state_dir, f"v{batch_id}")
     # The last artifact written marks the whole batch committed: the agg
     # (when enabled) is written after the state, so its marker is the
@@ -282,11 +309,11 @@ def _merge_parsed_batch(
     )
     if os.path.exists(commit_marker):
         return
-    batch_last, had_truncate, cached = _batch_last_per_key(parsed, cfg)
-    if batch_last is None:
-        return
-
-    try:
+    with _live_batch(changelog, cfg) as batch:
+        if batch is None:
+            return
+        live, had_truncate = batch
+        batch_last = _batch_last_per_key(live, cfg)
         # before=batch_id: crash replay of batch N must merge onto N's true
         # predecessor, never onto N's own (possibly partial) output.
         current = (
@@ -348,8 +375,6 @@ def _merge_parsed_batch(
             [(float(base_sum + deltas.d_sum), int(base_n + deltas.d_n))],
             "sum_value double, n_keys long",
         ).write.mode("overwrite").parquet(agg_out)
-    finally:
-        cached.unpersist(blocking=False)
 
 
 def start_replica_merge(
@@ -363,10 +388,15 @@ def start_replica_merge(
 ):
     """Sink 2: the replica, maintained by an idempotent per-batch merge.
 
+    Once per query: parse + classify (_derive_changelog) are applied to
+    the stream itself, so the changelog derivation is planned once and
+    each micro-batch arrives already derived.
+
     Per micro-batch (foreachBatch):
-      1. classify + batch-local truncate-epoch + last-event-per-key
-         (the same collapse_changelog plan as batch mode, but keeping
-         final deletes so they can erase existing state);
+      1. batch-local truncate-epoch (only when the batch holds a
+         truncate) + last-event-per-key (the same collapse_changelog plan
+         as batch mode, but keeping final deletes so they can erase
+         existing state);
       2. merge into current state: state rows whose key appears in the
          batch are dropped (anti join), surviving batch rows appended;
          a truncate in the batch wipes prior state entirely;
@@ -385,15 +415,13 @@ def start_replica_merge(
     can violate cross-batch order, use start_stateful_replica, which
     tracks per-key max offset in state and skips stale events.
     """
-    parsed_schema = row_schema
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _merge_parsed_batch(
-            _parse(batch_df, parsed_schema), cfg, state_dir, batch_id, agg_col=agg_col
-        )
+    def apply_batch(changelog: DataFrame, batch_id: int) -> None:
+        _merge_versioned_batch(changelog, cfg, state_dir, batch_id, agg_col=agg_col)
 
     writer = (
-        stream.writeStream.foreachBatch(apply_batch)
+        _derive_changelog(_parse(stream, row_schema), cfg)
+        .writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("update")
     )
@@ -416,11 +444,12 @@ def read_scd2(
 
 
 def _merge_scd2_batch(
-    parsed: DataFrame, cfg: ChangeTableConfig, state_dir: str, batch_id: int
+    changelog: DataFrame, cfg: ChangeTableConfig, state_dir: str, batch_id: int
 ) -> None:
-    """One micro-batch of parsed envelopes → incrementally-maintained SCD2
-    history (the streaming form of operators/cdc.scd2_history, with the
-    same idempotent versioned-parquet protocol as the replica merge).
+    """One micro-batch of changelog rows (_derive_changelog output) →
+    incrementally-maintained SCD2 history (the streaming form of
+    operators/cdc.scd2_history, with the same idempotent versioned-parquet
+    protocol as the replica merge).
 
     Within the batch, versions and their closers come from the same
     lead() window the batch operator uses. Across batches, the only state
@@ -434,27 +463,17 @@ def _merge_scd2_batch(
 
     Replaying batches 1..N through this merge yields byte-identical
     history to running scd2_history over the concatenated changelog
-    (pinned in test_streaming.py)."""
+    (pinned in test_streaming_scd2.py)."""
     from pyspark.sql.window import Window
 
-    from ..operators.cdc import envelope_changelog, truncate_epoch_filter
-
-    spark = parsed.sparkSession
+    spark = changelog.sparkSession
     out = os.path.join(state_dir, f"v{batch_id}")
     if os.path.exists(os.path.join(out, "_SUCCESS")):
         return
-    changelog = envelope_changelog(
-        parsed.withColumn("__ord", _order_coordinate()), cfg, passthrough_cols=("__ord",)
-    ).persist()
-    try:
-        probe = changelog.agg(
-            F.count("*").alias("n"),
-            F.sum((F.col(cfg.op_column) == "t").cast("int")).alias("nt"),
-        ).collect()[0]
-        if probe.n == 0:
+    with _live_batch(changelog, cfg) as batch:
+        if batch is None:
             return
-        had_truncate = (probe.nt or 0) > 0
-        live = truncate_epoch_filter(changelog, cfg.op_column, "__ord")
+        live, had_truncate = batch
         w = Window.partitionBy(*cfg.key_columns).orderBy("__ord")
         batch_versions = (
             live.select(
@@ -494,8 +513,6 @@ def _merge_scd2_batch(
         else:
             new_state = batch_versions
         new_state.write.mode("overwrite").parquet(out)
-    finally:
-        changelog.unpersist(blocking=False)
 
 
 def start_scd2_merge(
@@ -511,13 +528,13 @@ def start_scd2_merge(
     cdc_scd2 registry query). Same ordering contract and crash-replay
     idempotence as start_replica_merge; current versions of the history
     always equal the replica's state (pinned in tests)."""
-    parsed_schema = row_schema
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _merge_scd2_batch(_parse(batch_df, parsed_schema), cfg, state_dir, batch_id)
+    def apply_batch(changelog: DataFrame, batch_id: int) -> None:
+        _merge_scd2_batch(changelog, cfg, state_dir, batch_id)
 
     writer = (
-        stream.writeStream.foreachBatch(apply_batch)
+        _derive_changelog(_parse(stream, row_schema), cfg)
+        .writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("update")
     )
@@ -754,17 +771,16 @@ def start_replica_merge_bucketed(
     format where the commit is one metadata operation.
     """
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        parsed = _parse(batch_df, row_schema)
-        batch_last, had_truncate, cached = _batch_last_per_key(parsed, cfg)
-        if batch_last is None:
-            return
-        try:
+    def apply_batch(changelog: DataFrame, batch_id: int) -> None:
+        spark = changelog.sparkSession
+        with _live_batch(changelog, cfg) as batch:
+            if batch is None:
+                return
+            live, had_truncate = batch
             bucket = F.pmod(
                 F.hash(*[F.col(k) for k in cfg.key_columns]), F.lit(n_buckets)
             )
-            batch_last = batch_last.withColumn("bucket", bucket)
+            batch_last = _batch_last_per_key(live, cfg).withColumn("bucket", bucket)
             upserts = batch_last.filter(F.col("__op") != "d").select(
                 *cfg.key_columns, *cfg.value_columns, "bucket"
             )
@@ -781,9 +797,8 @@ def start_replica_merge_bucketed(
             if current is None:
                 merged = upserts
             else:
-                touched = [
-                    r.bucket for r in batch_last.select("bucket").distinct().collect()
-                ]
+                # a set, not .distinct(): no extra shuffle for a small batch
+                touched = list({r.bucket for r in batch_last.select("bucket").collect()})
                 # partition pruning: only touched buckets are read
                 cur_touched = current.filter(F.col("bucket").isin(touched))
                 keys = batch_last.select(*cfg.key_columns)
@@ -797,11 +812,10 @@ def start_replica_merge_bucketed(
             merged.write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy("bucket").parquet(state_dir)
-        finally:
-            cached.unpersist(blocking=False)
 
     writer = (
-        stream.writeStream.foreachBatch(apply_batch)
+        _derive_changelog(_parse(stream, row_schema), cfg)
+        .writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("update")
     )
@@ -975,7 +989,7 @@ def manifest_store_history(state_dir: str) -> list[dict]:
 
 
 def _merge_manifest_batch(
-    parsed: DataFrame,
+    changelog: DataFrame,
     cfg: ChangeTableConfig,
     state_dir: str,
     batch_id: int,
@@ -984,19 +998,20 @@ def _merge_manifest_batch(
     import glob as _glob
     import json as _json
 
-    spark = parsed.sparkSession
+    spark = changelog.sparkSession
     mdir = _manifest_dir(state_dir)
     manifest_path = os.path.join(mdir, f"v{batch_id}.json")
     # Idempotent crash replay: the manifest file IS the commit point —
     # a committed batch re-delivered by foreachBatch is skipped whole.
     if os.path.exists(manifest_path):
         return
-    batch_last, had_truncate, cached = _batch_last_per_key(parsed, cfg)
-    if batch_last is None:
-        return
     key0 = cfg.key_columns[0]
     cols = [*cfg.key_columns, *cfg.value_columns]
-    try:
+    with _live_batch(changelog, cfg) as batch:
+        if batch is None:
+            return
+        live, had_truncate = batch
+        batch_last = _batch_last_per_key(live, cfg)
         prev = (
             None
             if had_truncate
@@ -1008,8 +1023,10 @@ def _merge_manifest_batch(
             # The batch's distinct first-key values, collected SORTED:
             # bounded by the micro-batch contract (a batch is small; the
             # store is what's big), and the price of EXACT file pruning.
+            # Deduplicated in a Python set: batch_last is already one row
+            # per key, so a .distinct() would only add a shuffle.
             batch_keys = sorted(
-                r[0] for r in batch_last.select(key0).distinct().collect()
+                {r[0] for r in batch_last.select(key0).collect()}
             )
             for e in prev["files"]:
                 if not e.get("exact", True) or _any_key_in_range(
@@ -1096,8 +1113,6 @@ def _merge_manifest_batch(
         with open(tmp, "w") as f:
             _json.dump(manifest, f)
         os.replace(tmp, manifest_path)
-    finally:
-        cached.unpersist(blocking=False)
 
 
 def bootstrap_manifest_store(
@@ -1186,9 +1201,12 @@ def start_replica_merge_manifest(
         files (from any prior batch) composing version B's state, each
         with (rows, min/max of the first key column).
 
-    Per micro-batch: collapse to last-event-per-key (shared
-    _batch_last_per_key), prune the previous manifest to files whose
-    [min, max] key span contains at least one batch key (exact bisect
+    The changelog derivation (_derive_changelog) is applied to the stream
+    once, so it is planned once per query, not rebuilt in every batch.
+    Per micro-batch: collapse to last-event-per-key (shared _live_batch
+    and _batch_last_per_key; the truncate-epoch filter only runs in a
+    batch that holds a truncate), prune the previous manifest to files
+    whose [min, max] key span contains at least one batch key (exact bisect
     over the batch's sorted key set — driver-side, O(|batch| log) ),
     anti-join ONLY those files' rows against the broadcast batch keys,
     and write survivors+upserts as new range-partitioned files; the
@@ -1214,17 +1232,12 @@ def start_replica_merge_manifest(
     delta-spark itself is not installable in this container — NOTES.md).
     """
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _merge_manifest_batch(
-            _parse(batch_df, row_schema),
-            cfg,
-            state_dir,
-            batch_id,
-            target_rows_per_file,
-        )
+    def apply_batch(changelog: DataFrame, batch_id: int) -> None:
+        _merge_manifest_batch(changelog, cfg, state_dir, batch_id, target_rows_per_file)
 
     writer = (
-        stream.writeStream.foreachBatch(apply_batch)
+        _derive_changelog(_parse(stream, row_schema), cfg)
+        .writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("update")
     )
@@ -1416,22 +1429,25 @@ def start_multi_table_merge(
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         for name, (cfg, row_schema) in tables.items():
-            parsed = _parse(batch_df, row_schema).filter(
-                # truncate envelopes may omit the row images but always
-                # carry source.table; route on it.
-                F.col("source_table") == name
+            changelog = _derive_changelog(
+                _parse(batch_df, row_schema).filter(
+                    # truncate envelopes may omit the row images but always
+                    # carry source.table; route on it.
+                    F.col("source_table") == name
+                ),
+                cfg,
             )
             if store == "manifest":
                 _merge_manifest_batch(
-                    parsed,
+                    changelog,
                     cfg,
                     os.path.join(state_root, name),
                     batch_id,
                     target_rows_per_file,
                 )
             else:
-                _merge_parsed_batch(
-                    parsed, cfg, os.path.join(state_root, name), batch_id
+                _merge_versioned_batch(
+                    changelog, cfg, os.path.join(state_root, name), batch_id
                 )
 
     writer = (

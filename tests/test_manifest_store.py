@@ -106,6 +106,7 @@ class TestManifestMergeCorrectness:
         from simple_cdc_service_spark.schemas import INVOICE_ROW
         from simple_cdc_service_spark.sources.changelog import envelopes_df
         from simple_cdc_service_spark.streaming.pipeline import (
+            _derive_changelog,
             _merge_manifest_batch,
             _parse,
         )
@@ -114,14 +115,14 @@ class TestManifestMergeCorrectness:
         msgs, expected = generate_envelopes(
             n=120, seed=7, truncate_every=50, key_space=40
         )
-        parsed = _parse(envelopes_df(spark, msgs), INVOICE_ROW)
-        _merge_manifest_batch(parsed, INVOICE, state, 0, 200_000)
+        changelog = _derive_changelog(_parse(envelopes_df(spark, msgs), INVOICE_ROW), INVOICE)
+        _merge_manifest_batch(changelog, INVOICE, state, 0, 200_000)
         snap = {
             f: os.path.getmtime(f)
             for f in glob.glob(os.path.join(state, "**", "*"), recursive=True)
             if os.path.isfile(f)
         }
-        _merge_manifest_batch(parsed, INVOICE, state, 0, 200_000)
+        _merge_manifest_batch(changelog, INVOICE, state, 0, 200_000)
         snap2 = {
             f: os.path.getmtime(f)
             for f in glob.glob(os.path.join(state, "**", "*"), recursive=True)
@@ -153,6 +154,7 @@ class TestManifestPruning:
         from simple_cdc_service_spark.schemas import INVOICE_ROW
         from simple_cdc_service_spark.sources.changelog import envelopes_df
         from simple_cdc_service_spark.streaming.pipeline import (
+            _derive_changelog,
             _merge_manifest_batch,
             _parse,
             _read_manifest,
@@ -172,8 +174,8 @@ class TestManifestPruning:
             )
             for k in range(100)
         ]
-        parsed = _parse(envelopes_df(spark, hot), INVOICE_ROW)
-        _merge_manifest_batch(parsed, INVOICE, state, 1, 5_000)
+        changelog = _derive_changelog(_parse(envelopes_df(spark, hot), INVOICE_ROW), INVOICE)
+        _merge_manifest_batch(changelog, INVOICE, state, 1, 5_000)
         m1 = _read_manifest(state, 1)
         assert m1["files_total"] == len(m0["files"])
         assert m1["files_touched"] / m1["files_total"] < 0.15
@@ -196,6 +198,7 @@ class TestManifestPruning:
         from simple_cdc_service_spark.schemas import INVOICE_ROW
         from simple_cdc_service_spark.sources.changelog import envelopes_df
         from simple_cdc_service_spark.streaming.pipeline import (
+            _derive_changelog,
             _merge_manifest_batch,
             _parse,
             _read_manifest,
@@ -215,8 +218,8 @@ class TestManifestPruning:
             )
             for k in range(400)
         ]
-        parsed = _parse(envelopes_df(spark, uni), INVOICE_ROW)
-        _merge_manifest_batch(parsed, INVOICE, state, 1, 5_000)
+        changelog = _derive_changelog(_parse(envelopes_df(spark, uni), INVOICE_ROW), INVOICE)
+        _merge_manifest_batch(changelog, INVOICE, state, 1, 5_000)
         m1 = _read_manifest(state, 1)
         assert m1["files_touched"] / m1["files_total"] > 0.9
         assert read_replica_manifest(spark, state).count() == 100_000
@@ -225,6 +228,7 @@ class TestManifestPruning:
         from simple_cdc_service_spark.schemas import INVOICE_ROW
         from simple_cdc_service_spark.sources.changelog import envelopes_df
         from simple_cdc_service_spark.streaming.pipeline import (
+            _derive_changelog,
             _merge_manifest_batch,
             _parse,
         )
@@ -239,8 +243,8 @@ class TestManifestPruning:
             )
             for k in range(500)
         ]
-        parsed = _parse(envelopes_df(spark, dels), INVOICE_ROW)
-        _merge_manifest_batch(parsed, INVOICE, state, 1, 1_000)
+        changelog = _derive_changelog(_parse(envelopes_df(spark, dels), INVOICE_ROW), INVOICE)
+        _merge_manifest_batch(changelog, INVOICE, state, 1, 1_000)
         rep = read_replica_manifest(spark, state)
         assert rep.count() == 19_500
         assert rep.filter("order_id < 500").count() == 0
@@ -303,6 +307,7 @@ class TestAdviceR10Fixes:
         from simple_cdc_service_spark.schemas import row_schema
         from simple_cdc_service_spark.sources.changelog import envelopes_df
         from simple_cdc_service_spark.streaming.pipeline import (
+            _derive_changelog,
             _latest_manifest,
             _merge_manifest_batch,
             _parse,
@@ -327,8 +332,8 @@ class TestAdviceR10Fixes:
                 _envelope("c", None, {"order_id": 10_000, "invoice_number": 1}, 1, 1)
             )
         ]
-        parsed = _parse(envelopes_df(spark, batch), narrow_row)
-        _merge_manifest_batch(parsed, cfg, state, 0, 200_000)
+        changelog = _derive_changelog(_parse(envelopes_df(spark, batch), narrow_row), cfg)
+        _merge_manifest_batch(changelog, cfg, state, 0, 200_000)
         ddl = _latest_manifest(state)["schema_ddl"]
         assert "bigint" in ddl and "invoice_number` int" not in ddl, ddl
         rep = read_replica_manifest(spark, state)

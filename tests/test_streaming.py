@@ -101,16 +101,17 @@ class TestCrashRecoveryReplay:
 
         from simple_cdc_service_spark.sources.changelog import envelopes_df
         from simple_cdc_service_spark.streaming.pipeline import (
-            _merge_parsed_batch,
+            _derive_changelog,
+            _merge_versioned_batch,
             _parse,
         )
         from simple_cdc_service_spark.schemas import INVOICE_ROW
 
         state = str(tmp_path / "state")
         msgs, expected = generate_envelopes(n=120, seed=7, truncate_every=50, key_space=40)
-        parsed = _parse(envelopes_df(spark, msgs), INVOICE_ROW)
+        changelog = _derive_changelog(_parse(envelopes_df(spark, msgs), INVOICE_ROW), INVOICE)
 
-        _merge_parsed_batch(parsed, INVOICE, state, batch_id=0)
+        _merge_versioned_batch(changelog, INVOICE, state, batch_id=0)
         files_before = {
             f: os.path.getmtime(f)
             for f in glob.glob(os.path.join(state, "v0", "*.parquet"))
@@ -119,7 +120,7 @@ class TestCrashRecoveryReplay:
         assert got == expected
 
         # the replay: same batch_id, same data — must be a no-op, not a crash
-        _merge_parsed_batch(parsed, INVOICE, state, batch_id=0)
+        _merge_versioned_batch(changelog, INVOICE, state, batch_id=0)
         files_after = {
             f: os.path.getmtime(f)
             for f in glob.glob(os.path.join(state, "v0", "*.parquet"))
@@ -127,6 +128,60 @@ class TestCrashRecoveryReplay:
         assert files_after == files_before  # untouched, not rewritten
         got2 = {r.order_id: r.invoice_number for r in read_replica(spark, state).collect()}
         assert got2 == expected
+
+
+class TestPerBatchJobCount:
+    """A warm, truncate-free micro-batch runs a bounded number of Spark
+    jobs. Pins the per-batch fixed cost: a truncate-epoch broadcast
+    subquery re-run by every action, or a redundant shuffle before the
+    pruning-key collect, would each add jobs to every live micro-batch
+    (with both, these batches ran 16 manifest and 12 versioned jobs)."""
+
+    @staticmethod
+    def _jobs(spark, action) -> int:
+        import uuid
+
+        sc = spark.sparkContext
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_warm_truncate_free_batch_job_count(self, spark, tmp_path):
+        from simple_cdc_service_spark.schemas import INVOICE_ROW
+        from simple_cdc_service_spark.sources.changelog import envelopes_df
+        from simple_cdc_service_spark.streaming.pipeline import (
+            _derive_changelog,
+            _merge_manifest_batch,
+            _merge_versioned_batch,
+            _parse,
+        )
+
+        msgs, _ = generate_envelopes(n=400, seed=3, truncate_every=None, key_space=100)
+
+        def changelog(part):
+            return _derive_changelog(_parse(envelopes_df(spark, part), INVOICE_ROW), INVOICE)
+
+        manifest, versioned = str(tmp_path / "manifest"), str(tmp_path / "versioned")
+        merges = {
+            "manifest": (
+                lambda ch, b: _merge_manifest_batch(ch, INVOICE, manifest, b, 200_000),
+                10,
+            ),
+            "versioned": (
+                lambda ch, b: _merge_versioned_batch(ch, INVOICE, versioned, b),
+                8,
+            ),
+        }
+        for name, (merge, max_jobs) in merges.items():
+            merge(changelog(msgs[:200]), 0)  # warm: the store exists
+            batch = changelog(msgs[200:])
+            n_jobs = self._jobs(spark, lambda: merge(batch, 1))
+            assert n_jobs <= max_jobs, (name, n_jobs)
 
 
 class TestPKChangingUpdate:
@@ -328,17 +383,18 @@ class TestIncrementalAggMaintenance:
         from simple_cdc_service_spark.schemas import INVOICE_ROW
         from simple_cdc_service_spark.sources.changelog import envelopes_df
         from simple_cdc_service_spark.streaming.pipeline import (
-            _merge_parsed_batch,
+            _derive_changelog,
+            _merge_versioned_batch,
             _parse,
             read_agg,
         )
 
         msgs, _ = generate_envelopes(n=80, seed=2, truncate_every=None, key_space=30)
-        parsed = _parse(envelopes_df(spark, msgs), INVOICE_ROW)
+        changelog = _derive_changelog(_parse(envelopes_df(spark, msgs), INVOICE_ROW), INVOICE)
         state = str(tmp_path / "state")
-        _merge_parsed_batch(parsed, INVOICE, state, 0, agg_col="invoice_number")
+        _merge_versioned_batch(changelog, INVOICE, state, 0, agg_col="invoice_number")
         first = read_agg(spark, state)
-        _merge_parsed_batch(parsed, INVOICE, state, 0, agg_col="invoice_number")
+        _merge_versioned_batch(changelog, INVOICE, state, 0, agg_col="invoice_number")
         again = read_agg(spark, state)
         assert (first.sum_value, first.n_keys) == (again.sum_value, again.n_keys)
 
@@ -351,7 +407,8 @@ class TestIncrementalAggMaintenance:
         from simple_cdc_service_spark.schemas import INVOICE_ROW
         from simple_cdc_service_spark.sources.changelog import _envelope, envelopes_df
         from simple_cdc_service_spark.streaming.pipeline import (
-            _merge_parsed_batch,
+            _derive_changelog,
+            _merge_versioned_batch,
             _parse,
             read_agg,
         )
@@ -360,9 +417,9 @@ class TestIncrementalAggMaintenance:
 
         def merge(batch_id, events):
             msgs = [json.dumps(e) for e in events]
-            parsed = _parse(envelopes_df(spark, msgs), INVOICE_ROW)
-            _merge_parsed_batch(
-                parsed, INVOICE, state, batch_id, agg_col="invoice_number"
+            changelog = _derive_changelog(_parse(envelopes_df(spark, msgs), INVOICE_ROW), INVOICE)
+            _merge_versioned_batch(
+                changelog, INVOICE, state, batch_id, agg_col="invoice_number"
             )
             return read_agg(spark, state)
 

@@ -150,12 +150,19 @@ def test_scd2_schema_evolution_mid_stream(spark, tmp_path):
     from simple_cdc_service_spark.config import ChangeTableConfig
     from simple_cdc_service_spark.schemas import INVOICE_ROW, row_schema
     from simple_cdc_service_spark.sources.changelog import envelopes_df
-    from simple_cdc_service_spark.streaming.pipeline import _merge_scd2_batch, _parse
+    from simple_cdc_service_spark.streaming.pipeline import (
+        _derive_changelog,
+        _merge_scd2_batch,
+        _parse,
+    )
 
     state = str(tmp_path / "state")
     cfg_v1 = INVOICE
     b0 = [json.dumps(_envelope("c", None, {"order_id": 1, "invoice_number": 10}, 1, 1))]
-    _merge_scd2_batch(_parse(envelopes_df(spark, b0), INVOICE_ROW), cfg_v1, state, 0)
+    _merge_scd2_batch(
+        _derive_changelog(_parse(envelopes_df(spark, b0), INVOICE_ROW), cfg_v1),
+        cfg_v1, state, 0,
+    )
 
     evolved_row = row_schema(
         {
@@ -180,7 +187,10 @@ def test_scd2_schema_evolution_mid_stream(spark, tmp_path):
             )
         )
     ]
-    _merge_scd2_batch(_parse(envelopes_df(spark, b1), evolved_row), cfg_v2, state, 1)
+    _merge_scd2_batch(
+        _derive_changelog(_parse(envelopes_df(spark, b1), evolved_row), cfg_v2),
+        cfg_v2, state, 1,
+    )
 
     hist = read_scd2(spark, state).toPandas()
     old = hist[~hist["is_current"]].iloc[0]
@@ -209,3 +219,64 @@ def test_scd2_delete_closes_without_emitting(spark, tmp_path):
     assert len(rows) == 1
     r = rows[0]
     assert not r.is_current and r.valid_to is not None and r.invoice_number == 10
+
+
+def test_interleaved_truncate_batches_match_replay_across_sinks(spark, tmp_path):
+    """One query per sink streams micro-batches with and without a
+    truncate, interleaved, so both branches of the per-batch truncate
+    check run in the same query; then the last batch is re-delivered as
+    after a crash between its commit and the checkpoint. The versioned
+    and manifest replicas must equal the sequential replay, and the SCD2
+    history must equal the batch scd2_history over the whole stream."""
+    from simple_cdc_service_spark.streaming import (
+        read_replica_manifest,
+        start_replica_merge_manifest,
+    )
+    from simple_cdc_service_spark.streaming.pipeline import KAFKA_LIKE_SCHEMA
+
+    msgs, expected = generate_envelopes(
+        n=400, seed=17, truncate_every=100, key_space=50, pk_change_prob=0.1
+    )
+    src = str(tmp_path / "src")
+    chunks = [(lo, lo + 50) for lo in range(0, 400, 50)]
+    for i, (lo, hi) in enumerate(chunks):
+        _write_batch(src, f"part{i}.json", msgs[lo:hi], lo)
+        # the file source orders by modification time: make it strict
+        os.utime(os.path.join(src, f"part{i}.json"), (1_000_000 + i, 1_000_000 + i))
+    has_truncate = ['"op": "t"' in "".join(msgs[lo:hi]) for lo, hi in chunks]
+    assert True in has_truncate and False in has_truncate
+
+    sinks = {
+        "versioned": (start_replica_merge, lambda d: read_replica(spark, d)),
+        "manifest": (start_replica_merge_manifest, lambda d: read_replica_manifest(spark, d)),
+        "scd2": (start_scd2_merge, lambda d: read_scd2(spark, d)),
+    }
+    got = {}
+    for name, (start, read) in sinks.items():
+        state, ckpt = str(tmp_path / name), str(tmp_path / f"{name}_ckpt")
+
+        def run():
+            stream = (
+                spark.readStream.schema(KAFKA_LIKE_SCHEMA)
+                .option("maxFilesPerTrigger", 1)
+                .json(src)
+            )
+            start(stream, INVOICE, state, ckpt).awaitTermination()
+
+        run()
+        # crash after the last merge committed, before the checkpoint did:
+        # the restart re-delivers that batch
+        last_commit = os.path.join(ckpt, "commits", str(len(chunks) - 1))
+        os.remove(last_commit)
+        crc = os.path.join(ckpt, "commits", f".{len(chunks) - 1}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        run()
+        assert os.path.exists(last_commit)
+        got[name] = read(state)
+
+    for name in ("versioned", "manifest"):
+        assert {r.order_id: r.invoice_number for r in got[name].collect()} == expected
+    assert _history_rows(got["scd2"]) == _history_rows(_batch_scd2(spark, msgs))
+    current = got["scd2"].filter("is_current").collect()
+    assert {r.order_id: r.invoice_number for r in current} == expected

@@ -804,6 +804,7 @@ def bench_manifest_longfeed(
         vacuum_manifest_store,
     )
     from simple_cdc_service_spark.streaming.pipeline import (
+        _derive_changelog,
         _latest_manifest,
         _merge_manifest_batch,
         _parse,
@@ -839,9 +840,9 @@ def bench_manifest_longfeed(
             )
             expected[k] = v
             off += 1
-        parsed = _parse(envelopes_df(spark, msgs), INVOICE_ROW)
+        changelog = _derive_changelog(_parse(envelopes_df(spark, msgs), INVOICE_ROW), INVOICE)
         tb = time.perf_counter()
-        _merge_manifest_batch(parsed, INVOICE, state, b, 20_000)
+        _merge_manifest_batch(changelog, INVOICE, state, b, 20_000)
         walls.append(round(time.perf_counter() - tb, 3))
         files_over_time.append(len(_latest_manifest(state)["files"]))
         if compact_every and (b + 1) % compact_every == 0:
